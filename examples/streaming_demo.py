@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,8 +34,7 @@ def main(seconds: float = 12.0) -> None:
         "name AS event_type", "user AS user_id", "date AS ts", "duration AS value"
     )
     store = CountStore.start(
-        spark, events, table="demo_store", window="5 seconds",
-        watermark="10 seconds", trigger_seconds=1.0,
+        spark, events, window="5 seconds", watermark="10 seconds", trigger_seconds=1.0,
     )
     from kafka_streams_spring_cloud_stream_tp1_spark.serving import AnalyticsServer
 
@@ -42,8 +42,10 @@ def main(seconds: float = 12.0) -> None:
     print(f"live chart: {srv.url}/  (SSE: {srv.url}/analytics)")
     print(f"streaming 5 events/s; polling the count-store at 1 Hz for {seconds:.0f}s …")
     try:
-        for snapshot in store.serve(seconds=seconds, interval=1.0):
-            print("analytics:", snapshot, flush=True)
+        deadline = time.monotonic() + seconds
+        while time.monotonic() < deadline:
+            print("analytics:", store.range_fetch(), flush=True)
+            time.sleep(1.0)
     finally:
         srv.stop()
         store.stop()

@@ -5,10 +5,10 @@ Reproduces the reference's web surface (reference:
 controllers/PageEventController.java:34-58, static/index.html:17-37):
 
 - ``GET /analytics`` — Server-Sent Events: one ``{page -> count}``
-  JSON map per poll interval (1 Hz like the reference's
-  ``Flux.interval(Duration.ofSeconds(1))``), each snapshot produced by
+  JSON map per poll interval, fixed-rate at 1 Hz like the reference's
+  ``Flux.interval(Duration.ofSeconds(1))``, each snapshot produced by
   the injected ``fetch`` callable (normally `CountStore.range_fetch`,
-  the Q1 latest-window-per-key query).
+  the Q1 latest-window-per-key fold over the KV store, no Spark job).
 - ``GET /publish?name=X&topic=T`` — the S1 ingest endpoint: delegates
   to the injected ``publish`` callable and echoes the produced event
   as the JSON response body, exactly like the reference's
@@ -19,7 +19,7 @@ controllers/PageEventController.java:34-58, static/index.html:17-37):
   the serving contract (SSE wire format, 1 Hz cadence) is identical.
 
 Engine boundary note (SURVEY.md §2.1 V1): everything here is a THIN
-shell over driver-local queries — stdlib ``http.server`` only, no
+shell over driver-local store reads — stdlib ``http.server`` only, no
 framework. The serving thread reads the store while the streaming
 query's executor threads write it: the same store-writer vs
 store-reader split as the reference's InteractiveQueryService. At
@@ -58,13 +58,14 @@ class AnalyticsServer:
     """Tiny threaded HTTP server exposing the reference's endpoints.
 
     ``fetch``   — zero-arg callable returning the current analytics
-                  snapshot as a plain ``{name: count}`` dict (wrap a
-                  `CountStore.range_fetch().collect()`; kept callable-
-                  shaped so any store backend serves unchanged).
+                  snapshot as a plain ``{name: count}`` dict (e.g.
+                  `CountStore.range_fetch`; kept callable-shaped so
+                  any store serves unchanged).
     ``publish`` — optional ``(name, topic) -> dict`` ingest hook
                   returning the produced event for the HTTP echo; the
                   endpoint answers 503 when absent.
-    ``interval``— SSE poll cadence (reference: 1 s).
+    ``interval``— SSE poll cadence (reference: 1 s), fixed-rate: frame
+                  k starts at t0 + k·interval however long fetch took.
     """
 
     def __init__(
@@ -87,12 +88,7 @@ class AnalyticsServer:
     def for_store(cls, store, anchor=None, span: str = "5 seconds", **kwargs) -> "AnalyticsServer":
         """Serve a `CountStore`: each SSE tick runs the Q1 range fetch
         (latest window per page over [anchor − span, anchor])."""
-
-        def fetch() -> dict:
-            rows = store.range_fetch(anchor=anchor, span=span).collect()
-            return {r["name"]: r["cnt"] for r in rows}
-
-        return cls(fetch, **kwargs)
+        return cls(lambda: store.range_fetch(anchor=anchor, span=span), **kwargs)
 
     # -- lifecycle ---------------------------------------------------
 
@@ -137,7 +133,7 @@ class AnalyticsServer:
                         self.send_header("Content-Type", "text/event-stream")
                         self.send_header("Cache-Control", "no-cache")
                         self.end_headers()
-                        sent = 0
+                        sent, t0 = 0, time.monotonic()
                         while not outer._stopping.is_set():
                             snap = outer.fetch()
                             self.wfile.write(f"data: {json.dumps(snap)}\n\n".encode())
@@ -145,7 +141,10 @@ class AnalyticsServer:
                             sent += 1
                             if limit is not None and sent >= limit:
                                 break
-                            time.sleep(outer.interval)
+                            # fixed rate (Flux.interval): sleep to the next
+                            # t0 + k·interval tick; an overrun skips ticks
+                            elapsed = time.monotonic() - t0
+                            time.sleep(outer.interval - elapsed % outer.interval)
                     else:
                         self._json(404, {"error": f"no route {url.path}"})
                 except (BrokenPipeError, ConnectionResetError):

@@ -13,10 +13,11 @@ Semantic mappings (SURVEY.md §4.2):
   + trigger(processingTime="1 second") — emits changed aggregates per
   trigger, not one row per event.
 - RocksDB window store "count-store"  ==  the streaming state store
-  (RocksDB provider configured in session.py) PLUS a `memory` sink
-  table as the *queryable* projection; the interactive range-fetch
-  (Q1) is a tiny batch SQL over that table — same writer-thread vs.
-  reader-thread split as the reference's store.
+  (RocksDB provider configured in session.py) PLUS a foreachBatch
+  upsert into a KV store (`sinks.DictKVStore`) as the *queryable*
+  projection; the interactive range-fetch (Q1) folds that store in
+  plain Python — same writer-thread vs. reader-thread split as the
+  reference's store.
 - The reference's accidental 24h grace (deprecated TimeWindows.of) is
   replaced by an explicit, configurable watermark — a documented
   divergence; state must be evictable or a 100TB stream never
@@ -26,14 +27,15 @@ Semantic mappings (SURVEY.md §4.2):
 from __future__ import annotations
 
 import re
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from datetime import datetime, timedelta
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import core as ops
+from .sinks import DictKVStore
 
 _UNIT_SECONDS = {
     "millisecond": 0.001,
@@ -84,56 +86,35 @@ def streaming_windowed_counts(
 class CountStore:
     """The queryable window store (reference: RocksDB `count-store` +
     InteractiveQueryService, single-instance serving assumption —
-    SURVEY.md §4.2). Two backends:
+    SURVEY.md §4.2).
 
-    - ``backend="kv"`` (default, the production shape): the changelog
-      upserts into a `DictKVStore` via foreachBatch — the in-process
-      stand-in for an external KV (Redis/Cassandra). Store size is
-      BOUNDED: upserts are idempotent by (name, window) key and windows
-      older than the retention horizon (window + watermark by default,
-      the Kafka Streams windowSize+grace retention rule) are evicted on
-      write. A long-running stream holds only the live window set.
-    - ``backend="memory"`` (tests/demo): Spark's `memory` sink. Update
-      mode APPENDS each trigger's changed rows to the sink table
-      forever, so driver memory grows with stream lifetime — fine for
-      bounded tests, wrong for serving; snapshot() compensates for the
-      duplicate rows with a groupBy().max().
+    The changelog upserts into a `DictKVStore` via foreachBatch — the
+    in-process stand-in for an external KV (Redis/Cassandra). Store size
+    is BOUNDED: upserts are idempotent by (name, window) key and windows
+    older than the retention horizon (window + watermark by default, the
+    Kafka Streams windowSize+grace retention rule) are evicted on write,
+    so a long-running stream holds only the live window set. With a
+    ``checkpoint`` path a restarted query resumes its aggregation state
+    and offsets (exactly-once effect, tests/test_checkpoint_recovery.py).
     """
 
     spark: SparkSession
     query: StreamingQuery
-    table: str | None = None
-    store: "object | None" = None  # DictKVStore when backend="kv"
-
-    _poll: float = field(default=0.1, repr=False)
+    store: DictKVStore
 
     @classmethod
     def start(
         cls,
         spark: SparkSession,
         events: DataFrame,
-        table: str = "count_store",
         window: str = "5 seconds",
         watermark: str = "10 seconds",
         trigger_seconds: float | None = None,
-        backend: str = "kv",
         retention_seconds: "float | None" = _DEFAULT_RETENTION,
+        checkpoint: str | None = None,
         **kwargs,
     ) -> "CountStore":
         counts = streaming_windowed_counts(events, window=window, watermark=watermark, **kwargs)
-        if backend == "memory":
-            writer = (
-                counts.writeStream.outputMode("update")  # T1: KTable changelog
-                .format("memory")
-                .queryName(table)
-            )
-            if trigger_seconds is not None:
-                # the reference's commit.interval.ms=1000 emission cadence
-                writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-            return cls(spark=spark, query=writer.start(), table=table)
-
-        from .sinks import DictKVStore  # local import: sinks imports this module
-
         if retention_seconds is _DEFAULT_RETENTION:
             # Kafka Streams' minimum window-store retention: size + grace
             retention_seconds = interval_seconds(window) + interval_seconds(watermark)
@@ -149,7 +130,10 @@ class CountStore:
             store.upsert(rows, epoch_id)
 
         writer = counts.writeStream.outputMode("update").foreachBatch(upsert_batch)
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
         if trigger_seconds is not None:
+            # the reference's commit.interval.ms=1000 emission cadence
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return cls(spark=spark, query=writer.start(), store=store)
 
@@ -157,38 +141,22 @@ class CountStore:
         """Drain everything currently available (test/demo helper)."""
         self.query.processAllAvailable()
 
-    def snapshot(self) -> DataFrame:
-        """Current store contents: (name, window_start, window_end, cnt)."""
-        if self.store is not None:
-            rows = [(k[0], k[1], k[2], v) for k, v in self.store.snapshot().items()]
-            return self.spark.createDataFrame(
-                rows, "name string, window_start timestamp, window_end timestamp, cnt long"
-            )
-        raw = self.spark.table(self.table)
-        return raw.groupBy("name", "window_start", "window_end").agg(
-            F.max("cnt").alias("cnt")
-        )
-
-    def range_fetch(self, anchor: Column | None = None, span: str = "5 seconds") -> DataFrame:
+    def range_fetch(self, anchor: datetime | None = None, span: str = "5 seconds") -> dict[str, int]:
         """Q1 — the reference's 1 Hz interactive query
         (PageEventController.java:47-55): windows starting within
-        [anchor - span, anchor] folded to latest-window-per-page.
-        ``anchor`` defaults to now(), exactly like the reference.
+        [anchor - span, anchor] folded to ``{name: cnt}`` where the
+        latest window per page wins. Reads the KV snapshot in plain
+        Python, no Spark job. ``anchor`` defaults to now() like the
+        reference, as a naive local datetime — the clock domain
+        ``collect()`` gives the stored window starts.
         """
-        snap = self.snapshot().select("name", "window_start", "cnt")
-        anchor_col = anchor if anchor is not None else F.current_timestamp()
-        return ops.latest_window_per_key(snap, anchor_ts=anchor_col, span=span)
-
-    def serve(self, seconds: float, interval: float = 1.0):
-        """The SSE analytics loop (PageEventController.java:42-58):
-        poll the store once per `interval`, yield {page -> count}
-        snapshots. Generator instead of an HTTP server — the serving
-        protocol is out of engine scope (SURVEY.md V1)."""
-        deadline = time.monotonic() + seconds
-        while time.monotonic() < deadline:
-            rows = self.range_fetch().collect()
-            yield {r["name"]: r["cnt"] for r in rows}
-            time.sleep(interval)
+        anchor = anchor if anchor is not None else datetime.now()
+        lo = anchor - timedelta(seconds=interval_seconds(span))
+        latest: dict[str, tuple[datetime, int]] = {}
+        for (name, start, _end), cnt in self.store.snapshot().items():
+            if lo <= start <= anchor and (name not in latest or start > latest[name][0]):
+                latest[name] = (start, cnt)
+        return {name: cnt for name, (_start, cnt) in latest.items()}
 
     def stop(self) -> None:
         self.query.stop()

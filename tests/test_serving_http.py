@@ -7,15 +7,16 @@ store (reference: controllers/PageEventController.java:34-58)."""
 from __future__ import annotations
 
 import json
+import statistics
+import time
 import urllib.request
-
-from pyspark.sql import functions as F
+from datetime import datetime
 
 from kafka_streams_spring_cloud_stream_tp1_spark.schemas import EVENTS_SCHEMA
 from kafka_streams_spring_cloud_stream_tp1_spark.serving import AnalyticsServer
 from kafka_streams_spring_cloud_stream_tp1_spark.streaming import CountStore
 
-from .test_streaming import BASE, _event, _write_batch
+from .test_streaming import _event, _write_batch
 
 
 def test_publish_analytics_and_index(spark, tmp_path):
@@ -37,7 +38,7 @@ def test_publish_analytics_and_index(spark, tmp_path):
 
     srv = AnalyticsServer.for_store(
         store,
-        anchor=F.to_timestamp(F.lit(f"{BASE}04")),  # fixed anchor: data is at 2024-01-01
+        anchor=datetime(2024, 1, 1, 0, 0, 4),  # fixed anchor: data is at 2024-01-01
         publish=publish,
         interval=0.05,
     ).start()
@@ -86,3 +87,29 @@ def test_publish_unconfigured_returns_503(spark):
             assert e.code == 503
     finally:
         srv.stop()
+
+
+def test_sse_cadence_is_fixed_rate():
+    """Frames start on the t0 + k·interval grid like the reference's
+    Flux.interval: a fetch taking 0.6 × interval must not stretch the
+    gap between frames to interval + fetch."""
+    starts: list[float] = []
+
+    def slow_fetch() -> dict:
+        starts.append(time.monotonic())
+        time.sleep(0.12)
+        return {"P1": len(starts)}
+
+    srv = AnalyticsServer(fetch=slow_fetch, interval=0.2).start()
+    try:
+        with urllib.request.urlopen(f"{srv.url}/analytics?n=8", timeout=10) as r:
+            frames = [
+                json.loads(line[len(b"data: ") :])
+                for line in r.read().splitlines()
+                if line.startswith(b"data: ")
+            ]
+    finally:
+        srv.stop()
+    assert frames == [{"P1": k} for k in range(1, 9)]
+    gap = statistics.median(b - a for a, b in zip(starts, starts[1:]))
+    assert abs(gap - 0.2) < 0.04, gap  # sleep-after-fetch would give ~0.32 s

@@ -13,6 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kafka_streams_spring_cloud_stream_tp1_spark.operators import core as ops
 from kafka_streams_spring_cloud_stream_tp1_spark.schemas import EVENTS_SCHEMA
 from kafka_streams_spring_cloud_stream_tp1_spark.sources.generators import (
     page_event_batch,
@@ -24,7 +25,6 @@ from kafka_streams_spring_cloud_stream_tp1_spark.streaming.kafka import (
     parse_page_events,
 )
 
-BASE = "2024-01-01 00:00:"
 _EPOCH0 = datetime(2024, 1, 1)
 
 
@@ -52,19 +52,29 @@ def stream_dir(tmp_path):
     return str(d)
 
 
-def _start_store(spark, stream_dir, table):
+def _start_store(spark, stream_dir):
     events = spark.readStream.schema(EVENTS_SCHEMA).json(stream_dir)
     # retention disabled: these tests assert on closed windows, which
     # the production default (window + watermark) would evict;
     # test_kv_store_retention_bounds_size covers the eviction path
     return CountStore.start(
-        spark, events, table=table, window="5 seconds", watermark="10 seconds",
-        retention_seconds=None,
+        spark, events, window="5 seconds", watermark="10 seconds", retention_seconds=None,
     )
 
 
+def _q1_reference(spark, snap, anchor, span="5 seconds"):
+    """The Spark fold (`ops.latest_window_per_key`) over the same store
+    rows `CountStore.range_fetch` folds in Python."""
+    rows = [(name, start, cnt) for (name, start, _end), cnt in snap.items()]
+    df = spark.createDataFrame(rows, "name string, window_start timestamp, cnt long")
+    return {
+        r["name"]: r["cnt"]
+        for r in ops.latest_window_per_key(df, anchor_ts=F.lit(anchor), span=span).collect()
+    }
+
+
 def test_windowed_counts_and_range_fetch(spark, stream_dir):
-    store = _start_store(spark, stream_dir, "cs_main")
+    store = _start_store(spark, stream_dir)
     try:
         # batch 1: window [0,5s) gets 2 qualifying P-views, [5,10s) gets 1;
         # a low-duration event is filtered out (F1)
@@ -79,35 +89,50 @@ def test_windowed_counts_and_range_fetch(spark, stream_dir):
             ],
         )
         store.process_all()
-        snap = {
-            (r["name"], r["window_start"].second): r["cnt"]
-            for r in store.snapshot().collect()
-        }
+        snap = {(k[0], k[1].second): v for k, v in store.store.snapshot().items()}
         assert snap == {("P1", 0): 2, ("P2", 5): 1}
 
         # batch 2: same P1 window gets one more view -> count UPDATES to 3
         # (KTable changelog semantics: latest value per (key, window))
         _write_batch(stream_dir, "b2", [_event(4, 4.0, "P1", 500.0)])
         store.process_all()
-        snap = {
-            (r["name"], r["window_start"].second): r["cnt"]
-            for r in store.snapshot().collect()
-        }
+        snap = {(k[0], k[1].second): v for k, v in store.store.snapshot().items()}
         assert snap == {("P1", 0): 3, ("P2", 5): 1}
 
         # Q1: anchor at 7s, span 5s -> windows starting in [2s, 7s]:
         # only [5,10s); latest-per-key fold gives {P2: 1}
-        fetched = {
-            r["name"]: r["cnt"]
-            for r in store.range_fetch(anchor=F.to_timestamp(F.lit(f"{BASE}07"))).collect()
+        assert store.range_fetch(anchor=_EPOCH0 + timedelta(seconds=7)) == {"P2": 1}
+
+        # batch 3: P1 gets a second window [5,10s), P3 opens [10,15s)
+        _write_batch(
+            stream_dir, "b3", [_event(5, 6.0, "P1", 200.0), _event(6, 11.0, "P3", 200.0)]
+        )
+        store.process_all()
+        kv = store.store.snapshot()
+        cases = {
+            # window [0,5s) starts exactly at the anchor: upper bound inclusive
+            0: {"P1": 3},
+            # P1 has windows at 0s (= anchor - span) and 5s (= anchor):
+            # the latest window wins
+            5: {"P1": 1, "P2": 1},
+            # windows at 5s sit exactly on anchor - span: lower bound
+            # inclusive; P3's window at 10s sits exactly on the anchor
+            10: {"P1": 1, "P2": 1, "P3": 1},
+            # empty ranges: after every window, and before the first
+            60: {},
+            -6: {},
         }
-        assert fetched == {"P2": 1}
+        for second, want in cases.items():
+            anchor = _EPOCH0 + timedelta(seconds=second)
+            got = store.range_fetch(anchor=anchor)
+            assert type(got) is dict and got == want, (second, got)
+            assert got == _q1_reference(spark, kv, anchor), second
     finally:
         store.stop()
 
 
 def test_watermark_drops_too_late_data(spark, stream_dir):
-    store = _start_store(spark, stream_dir, "cs_late")
+    store = _start_store(spark, stream_dir)
     try:
         # advance stream-time to 60s => watermark 50s after this batch
         _write_batch(
@@ -126,10 +151,7 @@ def test_watermark_drops_too_late_data(spark, stream_dir):
             ],
         )
         store.process_all()
-        snap = {
-            (r["name"], r["window_start"].minute, r["window_start"].second): r["cnt"]
-            for r in store.snapshot().collect()
-        }
+        snap = {(k[0], k[1].minute, k[1].second): v for k, v in store.store.snapshot().items()}
         assert snap[("P1", 0, 0)] == 1, "too-late event must NOT update the closed window"
         assert snap[("P1", 1, 0)] == 2, "late-but-within-watermark event must update"
     finally:
@@ -163,28 +185,6 @@ def test_kv_store_retention_bounds_size(spark, stream_dir):
         assert len(snap) < 5
         latest = {(k[0], k[1].minute, k[1].second): v for k, v in snap.items()}
         assert latest[("P1", 1, 20)] == 3  # secs 80..82 -> window [80,85) = 1m20s
-    finally:
-        store.stop()
-
-
-def test_memory_backend_snapshot_dedups_updates(spark, stream_dir):
-    """The memory-sink backend (tests/demo) appends one row per update;
-    snapshot() must fold them back to latest-per-(key, window)."""
-    store = CountStore.start(
-        spark,
-        spark.readStream.schema(EVENTS_SCHEMA).json(stream_dir),
-        table="cs_mem",
-        backend="memory",
-        window="5 seconds",
-        watermark="10 seconds",
-    )
-    try:
-        _write_batch(stream_dir, "b1", [_event(0, 1.0, "P1", 200.0)])
-        store.process_all()
-        _write_batch(stream_dir, "b2", [_event(1, 2.0, "P1", 300.0)])
-        store.process_all()  # same window updates: sink now holds 2 rows for it
-        rows = store.snapshot().collect()
-        assert len(rows) == 1 and rows[0]["cnt"] == 2
     finally:
         store.stop()
 
