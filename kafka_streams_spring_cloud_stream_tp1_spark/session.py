@@ -8,6 +8,13 @@ the same plans scale to a multi-executor cluster:
 - Session timezone pinned to UTC so event-time windows are deterministic
   and match the DuckDB oracle (naive-UTC timestamps on both sides).
 - Arrow enabled: every Pandas-UDF hop is Arrow-batched, not pickled rows.
+- Streaming state: RocksDB with changelog checkpointing, so a commit
+  uploads the rows it changed rather than a snapshot per partition. The
+  32 shuffle partitions are the batch width only: stateful streams start
+  through `streaming.sinks.start_stateful` with one state partition per
+  task slot (`defaultParallelism`). The count is fixed when a query's
+  first checkpoint is written; a checkpoint created at 32 keeps 32 until
+  the query restarts from a fresh checkpoint directory.
 """
 
 from __future__ import annotations
@@ -53,6 +60,9 @@ def get_spark(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
+        # Spark documents it as compatible both ways with snapshot-only
+        # checkpoints, so existing checkpoints restart unchanged
+        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         # local[N] puts driver+executors in ONE JVM; the 1g default heap
         # OOMs under 32 concurrent tasks doing array-heavy work. No-op

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import PAGE_EVENT_SCHEMA
+from .sinks import start_stateful
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -87,7 +88,7 @@ def write_count_changelog_kafka(
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return start_stateful(writer, counts.sparkSession)
 
 
 def write_page_events_kafka(events: DataFrame, topic: str, bootstrap: str) -> None:

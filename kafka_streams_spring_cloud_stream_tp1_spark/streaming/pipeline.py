@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import core as ops
-from .sinks import DictKVStore
+from .sinks import DictKVStore, start_stateful
 
 _UNIT_SECONDS = {
     "millisecond": 0.001,
@@ -135,7 +135,7 @@ class CountStore:
         if trigger_seconds is not None:
             # the reference's commit.interval.ms=1000 emission cadence
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return cls(spark=spark, query=writer.start(), store=store)
+        return cls(spark=spark, query=start_stateful(writer, spark), store=store)
 
     def process_all(self) -> None:
         """Drain everything currently available (test/demo helper)."""
@@ -208,4 +208,4 @@ def start_session_stream(
     )
     if trigger_seconds is not None:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_stateful(writer, events.sparkSession)

@@ -12,6 +12,9 @@ the epoch.
 a real deployment swaps `upsert` for the store's batch-write call;
 everything else (update-mode changelog, checkpointing, recovery) is
 the production wiring, exercised by tests/test_checkpoint_recovery.py.
+
+`start_stateful` starts every stateful stream in the package with one
+state-store partition per task slot instead of the batch shuffle width.
 """
 
 from __future__ import annotations
@@ -19,7 +22,32 @@ from __future__ import annotations
 import threading
 from datetime import timedelta
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+_START_LOCK = threading.Lock()
+
+
+def start_stateful(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
+    """``writer.start()`` with one state-store partition per task slot.
+
+    A stateful stream's shuffle width is its state-store partition
+    count, and every partition pays a RocksDB load and commit on every
+    trigger however few rows it holds; at the batch width (32) a live
+    stream spends most of each trigger on empty partitions. The query
+    clones the session conf when it starts, so the session value is
+    restored right after; the lock keeps two starts from interleaving,
+    so neither restores the other's override. Spark records the count in
+    the checkpoint's offset log and reads it back on restart, so an
+    existing checkpoint keeps the count it was created with."""
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        session_value = spark.conf.get(key)
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, session_value)
 
 
 class DictKVStore:

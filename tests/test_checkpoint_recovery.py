@@ -12,7 +12,10 @@ from datetime import datetime, timedelta
 import pytest
 
 from kafka_streams_spring_cloud_stream_tp1_spark.schemas import EVENTS_SCHEMA
-from kafka_streams_spring_cloud_stream_tp1_spark.streaming import CountStore
+from kafka_streams_spring_cloud_stream_tp1_spark.streaming import (
+    CountStore,
+    streaming_windowed_counts,
+)
 
 _EPOCH0 = datetime(2024, 1, 1)
 
@@ -57,6 +60,48 @@ def test_restart_from_checkpoint_restores_state(spark, tmp_path):
         run2.process_all()
         snap2 = {k[0:1] + (k[1].second,): v for k, v in run2.store.snapshot().items()}
         # count continues from restored state: 2 (pre-stop) + 1 = 3
+        assert snap2 == {("P1", 0): 3}, snap2
+    finally:
+        run2.stop()
+
+
+def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
+    """A checkpoint keeps the state-partition count it was created with:
+    run 1 is a raw stream started at 3 shuffle partitions, and the
+    restart through `CountStore.start` (which starts fresh streams at
+    one partition per task slot) still reads 3 stores and the restored
+    count."""
+    src = tmp_path / "in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    events = lambda: spark.readStream.schema(EVENTS_SCHEMA).json(str(src))  # noqa: E731
+    key = "spark.sql.shuffle.partitions"
+
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        run1 = (
+            streaming_windowed_counts(events())
+            .writeStream.outputMode("update")
+            .format("noop")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, session_value)
+    try:
+        _write_batch(str(src), "b1", [_event(0, 1.0), _event(1, 2.0)])
+        run1.processAllAvailable()
+        assert run1.lastProgress["stateOperators"][0]["numStateStoreInstances"] == 3
+    finally:
+        run1.stop()
+
+    run2 = CountStore.start(spark, events(), checkpoint=ckpt)
+    try:
+        _write_batch(str(src), "b2", [_event(2, 3.0)])
+        run2.process_all()
+        assert run2.query.lastProgress["stateOperators"][0]["numStateStoreInstances"] == 3
+        snap2 = {k[0:1] + (k[1].second,): v for k, v in run2.store.snapshot().items()}
         assert snap2 == {("P1", 0): 3}, snap2
     finally:
         run2.stop()

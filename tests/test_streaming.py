@@ -7,6 +7,9 @@ watermark/late-data handling — the behaviors a batch oracle can't see.
 from __future__ import annotations
 
 import json
+import sys
+import threading
+import time
 from datetime import datetime, timedelta
 
 import pytest
@@ -24,6 +27,7 @@ from kafka_streams_spring_cloud_stream_tp1_spark.streaming.kafka import (
     format_count_changelog,
     parse_page_events,
 )
+from kafka_streams_spring_cloud_stream_tp1_spark.streaming.sinks import start_stateful
 
 _EPOCH0 = datetime(2024, 1, 1)
 
@@ -129,6 +133,54 @@ def test_windowed_counts_and_range_fetch(spark, stream_dir):
             assert got == _q1_reference(spark, kv, anchor), second
     finally:
         store.stop()
+
+
+def test_count_store_sizes_state_to_task_slots(spark, stream_dir):
+    """The stateful stream runs one state-store partition per task slot,
+    not the session's batch shuffle width, and leaves that width as it
+    was for the batch queries that follow."""
+    session_value = spark.conf.get("spark.sql.shuffle.partitions")
+    store = _start_store(spark, stream_dir)
+    try:
+        _write_batch(stream_dir, "b1", [_event(0, 1.0, "P1", 200.0)])
+        store.process_all()
+        state_ops = store.query.lastProgress["stateOperators"]
+        assert state_ops[0]["numStateStoreInstances"] == spark.sparkContext.defaultParallelism
+    finally:
+        store.stop()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_value
+
+
+def test_concurrent_stateful_starts_restore_session_width(spark):
+    """Concurrent `start_stateful` calls each see the per-slot width and
+    leave the session's batch width behind; without the start lock a
+    start can save another's override and restore it last."""
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    seen = []
+
+    class _Writer:
+        def start(self):
+            seen.append(spark.conf.get(key))
+            time.sleep(0.005)
+            return "query"
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        workers = [
+            threading.Thread(target=lambda: [start_stateful(_Writer(), spark) for _ in range(5)])
+            for _ in range(8)
+        ]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+        assert not any(w.is_alive() for w in workers)
+    finally:
+        sys.setswitchinterval(interval)
+    assert seen == [str(spark.sparkContext.defaultParallelism)] * 40
+    assert spark.conf.get(key) == session_value
 
 
 def test_watermark_drops_too_late_data(spark, stream_dir):
